@@ -491,10 +491,8 @@ object AnnIndex extends QueryModule {
   /** Copy rows as a LOCAL relation: the base vectors are collected once
     * (one pushed point-lookup job) and the copies ship inline with the
     * plan. The broadcast-crossJoin construction this replaced re-ran its
-    * exchange on EVERY downstream execution of the corpus frame — a
-    * serving walk's per-hop point lookups each re-broadcast the copy
-    * side (2 async jobs per scorer call; 8 of the flat walk's 18 jobs
-    * were copy re-broadcasts, profiled in tools/ProfileGraphRow `walk`).
+    * exchange on EVERY downstream execution of the corpus frame, so
+    * every scan of the corpus re-broadcast the copy side.
     */
   private[graft] def plantedLocalRows(spark: SparkSession, e: DataFrame,
       pairs: Seq[(Long, Long)]): DataFrame = {
@@ -3194,9 +3192,9 @@ object AnnIndex extends QueryModule {
   }
 
   /** The hierarchical batch row: same five-family construction and
-    * 50-row oracle, served through `GraphAnn.hnswBatchSearch` — the
-    * descent batches too (one shared walk per rung seeds every query's
-    * next rung) and fetched vectors are reused across rungs.
+    * 50-row oracle, the 5-query batch served by
+    * `GraphAnn.hnswServedSearch` as one Spark job over the resident pin
+    * (every task descends its queries through the pinned ladder).
     */
   def annHnswBatchTopk(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -3213,16 +3211,15 @@ object AnnIndex extends QueryModule {
     }
     val queries = qbase.collect() // 5 rows — the query batch
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-    graft.vector.GraphAnn.hnswBatchSearch(
+    graft.vector.GraphAnn.hnswServedSearch(
       spark, path, corpus, "embedding", "vec_id", queries, k = 10)
   }
 
   /** RESIDENT-VIEW serving through the HNSW ladder
     * (`GraphAnn.hnswServedSearch`) — the same fixture and 50-row oracle
     * as the hierarchical batch row, answered in ONE Spark job: every
-    * rung's adjacency joins layer 0 in the broadcast view, and each task
-    * descends its queries in memory with hnswSearch's exact carried-seed
-    * semantics. Parity with the distributed ladder walk is spec-pinned.
+    * rung's adjacency joins layer 0 in the pinned view, and each task
+    * descends its queries in memory with hnswSearch's own walk.
     */
   def annHnswServedTopk(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -3327,16 +3324,14 @@ object AnnIndex extends QueryModule {
   }
 
   /** BATCH graph retrieval: the five-family planted construction of the
-    * LSH/IVF batch rows served by ONE shared-job walk
-    * (`GraphAnn.nswBatchSearch`) — per hop, one adjacency fetch for the
-    * union of all five frontiers and one embedding fetch for the union
-    * of all new candidates, so batch cost amortizes instead of
-    * multiplying by |q|. Each family is a 10-clique in the graph (its
-    * members are mutually nearest), so a walk that reaches ANY member
-    * drains the family; the enumerable 50-row oracle (self + nine copies
-    * per query, all at 1.0) is the same one the LSH/IVF batch rows use —
-    * a regression in frontier bookkeeping, the shared fetches, per-query
-    * state isolation, or emission perturbs the set.
+    * LSH/IVF batch rows, the whole batch served by `GraphAnn.nswServedSearch`
+    * as ONE Spark job over the resident pin, so batch cost amortizes
+    * instead of multiplying by |q|. Each family is a 10-clique in the
+    * graph (its members are mutually nearest), so a walk that reaches ANY
+    * member drains the family; the enumerable 50-row oracle (self + nine
+    * copies per query, all at 1.0) is the same one the LSH/IVF batch rows
+    * use — a regression in frontier bookkeeping, per-query state
+    * isolation, or emission perturbs the set.
     */
   def annGraphBatchTopk(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -3353,20 +3348,16 @@ object AnnIndex extends QueryModule {
     }
     val queries = qbase.collect() // 5 rows — the query batch
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-    graft.vector.GraphAnn.nswBatchSearch(
+    graft.vector.GraphAnn.nswServedSearch(
       spark, path, corpus, "embedding", "vec_id", queries, k = 10)
-      .withColumn("qid", col("qid").cast("long"))
   }
 
   /** RESIDENT-VIEW graph serving (`GraphAnn.nswServedSearch`) — the
     * hnswlib online-serving model over the SAME fixture and oracle as
-    * the batch walk row: adjacency + shard vectors + tombstones pinned
-    * once as broadcast state, the whole 5-query batch answered by ONE
-    * Spark job whose tasks walk entirely in memory. Removes the per-hop
-    * driver round-trips and plan-construction constant the distributed
-    * walk pays; AnnIndexSpec's "served walk parity" pins equality with
-    * nswBatchSearch, and the enumerable 50-row planted oracle gates the
-    * answers here.
+    * the batch walk row: adjacency + corpus vectors + tombstones pinned
+    * once per index version, the whole 5-query batch answered by ONE
+    * Spark job whose tasks walk entirely in memory; the enumerable 50-row
+    * planted oracle gates the answers here.
     */
   def annGraphServedTopk(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -3625,8 +3616,8 @@ object AnnIndex extends QueryModule {
     *  - graph: walkRowsTouched + walkJobs × jobCostRows — the beam walk
     *           touches O(E + H·B·2M) rows regardless of corpus size but
     *           pays a fixed per-job scheduling cost; jobCostRows converts
-    *           the profiled ~60 ms/job (tools/ProfileGraphRow `walk`)
-    *           into row-equivalents at parquet scan rate.
+    *           the measured per-job constant into row-equivalents at
+    *           parquet scan rate.
     *
     * The crossover this encodes is the real one: scan families win small
     * corpora (shards, filters), the graph wins once nRows × probeFrac
@@ -3658,13 +3649,13 @@ object AnnIndex extends QueryModule {
     *    (`cachedGraphHopCurve` — the same curve the serving gate pins) at
     *    the deployed hop budget (`chooseHops`): rows touched per walk is
     *    the curve's scored-candidates column divided by its sample size,
-    *    and the job count follows the walk's structure (1 entry job +
-    *    2 jobs/hop + 1 emission probe);
+    *    and the job count is a per-hop walk's (1 entry job + 2 jobs/hop
+    *    + 1 emission probe). Walks run over the resident pin, but the
+    *    model keeps this count so that route choices do not move;
     *  - `jobCostRows`: the profiled per-job scheduling constant (median
     *    of 3 empty jobs, measured HERE, not assumed) converted to
     *    row-equivalents by the measured single-column parquet scan rate
-    *    of this corpus — the ProfileGraphRow methodology made a
-    *    per-session measurement;
+    *    of this corpus, measured once per session;
     *  - `codesBandwidth`: from the corpus' actual embedding width d —
     *    the SQ8 serving layout reads (d + id) bytes against the float
     *    scan's (4d + id), plus a fixed overscan float-fetch allowance;

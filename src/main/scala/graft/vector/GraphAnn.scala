@@ -1,5 +1,7 @@
 package graft.vector
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,16 +27,21 @@ import org.apache.spark.sql.functions._
   *    hash-clustered on node_id so frontier fetches prune.
   *
   * Scale shape, query (the serving path):
-  *  - E entry points = hash-min sample of the corpus (deterministic,
-  *    query-independent — the fixed entry of HNSW generalized).
-  *  - H bounded hops; each hop fetches the frontier's adjacency rows by
-  *    pushed `node_id IN` point lookups (partition/row-group pruning at
-  *    the source), scores the new candidates against the query from the
-  *    per-corpus-version resident vector pin (the hnswlib serving bound —
-  *    see vecPin), and keeps the global best B.
-  *  - Driver-side state is (B + E + H·B·M) (id, score) entries — a few
-  *    hundred rows, the MMR/pagination serving-path bound, documented
-  *    at each collect. Nothing corpus-sized ever moves.
+  *  - Every walk reads ONE resident pin per index version (path,
+  *    asOfSeq): each ladder rung's merged adjacency, the corpus
+  *    (id, emb) and the tombstone set, collected once and reused across
+  *    calls until a mutation moves the stamp (see View). A single query
+  *    walks on the driver with no Spark job; a served batch is one Spark
+  *    job whose tasks walk in memory.
+  *  - E entry points = a prefix of the rung's hash-ordered ids
+  *    (deterministic, query-independent — the fixed entry of HNSW
+  *    generalized); H bounded hops, each expanding the global best B
+  *    visited nodes and scoring their neighbors against the query.
+  *  - Driver memory: per pinned index version, (id, emb) for the whole
+  *    corpus + each rung's adjacency + the tombstones, for at most 16
+  *    versions (LRU). This is the memory a hnswlib serving node needs;
+  *    it grows with the corpus, and there is no byte budget and no
+  *    fallback path yet.
   *
   * Determinism: seeded hyperplanes, windowed ties by id, fixed E/B/H —
   * identical data in, identical graph and identical search result out.
@@ -122,8 +129,8 @@ object GraphAnn {
     */
   // Explicit read schemas: adjacency/tombstone layouts are fixed by the
   // writers above, and letting the reader infer them costs a footer-read
-  // Spark job per open — a serving walk opens the graph on every call,
-  // so inference was a per-walk job for information the code already has.
+  // Spark job per open — every pin build, append and fold opens the
+  // graph, so inference was a job for information the code already has.
   // (seq is the delta leaves' directory-partition column; declaring it
   // long here also replaces the int-discovery + cast dance.)
   private val adjSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -305,9 +312,9 @@ object GraphAnn {
     * no adjacency files are touched. Search semantics until the next
     * fold: a tombstoned node may still be hopped THROUGH (its edges keep
     * its neighborhood connected — dropping it from the walk could strand
-    * every region it bridges) but is never EMITTED. The emission filter
-    * is one pushed `id IN` probe over the sidecar, bounded by the visited
-    * set, so serving cost does not grow with the tombstone count.
+    * every region it bridges) but is never EMITTED. Walks read the
+    * tombstone set from their resident pin, which the sidecar's stamp
+    * re-pins.
     */
   def deleteFromNswGraph(spark: SparkSession, ids: Seq[Long], path: String): Unit = {
     import spark.implicits._
@@ -376,10 +383,7 @@ object GraphAnn {
     */
   private def foldRungTombstones(spark: SparkSession, rungPaths: Seq[String],
       tomb: DataFrame, corpus: DataFrame, embCol: String, idCol: String,
-      m: Int): Unit = withWalkConfs(spark) { spark =>
-    // walk confs apply to the fold too: its only corpus-wide touch is the
-    // map-side raw scan (no shuffle for AQE to replan), and every shuffle
-    // below is bounded by |deleted| × in-degree
+      m: Int): Unit = {
     // THE one corpus-wide pass this job fundamentally needs: the graph
     // stores OUT-edges only, so finding the deleted set's in-neighbors
     // must touch every rung's adjacency once. It runs over the RAW
@@ -597,295 +601,13 @@ object GraphAnn {
     reclaimed
   }
 
-  /** Deterministic entry points: the E graph ids with the smallest
-    * xxhash64 — a fixed, query-independent sample (catalog-scale read of
-    * id + hash only).
-    */
-  private def entryPoints(spark: SparkSession, adj: DataFrame, e: Int): Seq[Long] =
-    adj.select(col("node_id"), xxhash64(col("node_id")).as("h"))
-      .orderBy(col("h").asc, col("node_id").asc).limit(e)
-      .collect().map(_.getLong(0)).toIndexedSeq // serving-path: E rows
-
-  // ---- scorer-side resident vector pin ---------------------------------
-  // The rescore side of a walk pinned per corpus version — the same
-  // residentPin discipline the `_served`/`_vacuumed` rows already use,
-  // applied to the DISTRIBUTED walk's scorer: the per-hop cosine
-  // previously ran as one Spark job per hop (a pushed `id IN` point
-  // lookup + collect), which at ~40 ms of plan/codegen/scheduling per
-  // job dominated every walk row's wall time while fetching a few
-  // hundred rows. The pin collects the corpus projection (id, emb) ONCE
-  // per corpus signature (ResultCache.cacheKey — plan + input-file
-  // stamps, so any upsert/delete/planted-copy change invalidates) and
-  // hops score by map lookup: per-hop job count halves, and the walk's
-  // own pushed `node_id IN` adjacency point-lookups keep the distributed
-  // walk shape. 100 TB posture: (id, emb) resident per indexed shard is
-  // exactly the memory bound hnswlib requires of a serving node — the
-  // argument residentPin documents; the unpinned cold path is one narrow
-  // projection scan per corpus version, paid inside the serve.
-  // Driver-side map only (the beam loop runs on the driver); LRU-bounded.
-  private val VecPinMax = 16
-  private val vecPinCache = new java.util.LinkedHashMap[
-      String, Map[Long, Array[Float]]](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, Map[Long, Array[Float]]]): Boolean =
-      size > VecPinMax
-  }
-
-  private def vecPin(corpus: DataFrame, embCol: String,
-      idCol: String): Map[Long, Array[Float]] = {
-    val proj = corpus.select(col(idCol).cast("long"), col(embCol))
-    val key = graft.ops.ResultCache.cacheKey(proj)
-    val hit = vecPinCache.synchronized(Option(vecPinCache.get(key)))
-    hit.getOrElse {
-      val m = proj.collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      vecPinCache.synchronized(vecPinCache.put(key, m))
-      m
-    }
-  }
-
-  /** The pinned dot product: double accumulation left-to-right over the
-    * min length — the exact loop of the native DotProduct expression
-    * (org.apache.spark.sql.graft.DotProduct.nullSafeEval) the distributed
-    * scorer evaluated, so pinned scores are bit-identical (the batch-walk
-    * parity spec pins this across the two paths).
-    */
-  private def pinnedDot(e: Array[Float], q: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(e.length, q.length)
-    while (i < n) { s += e(i).toDouble * q(i).toDouble; i += 1 }
-    s
-  }
-
-  /** Exact query scores for a bounded id set, over the corpus pin — the
-    * per-hop scoring primitive shared by the flat and hierarchical walks.
-    * Ids absent from the corpus score nothing, exactly as the previous
-    * pushed `id IN` point lookup returned no row for them.
-    */
-  private def scorer(corpus: DataFrame, embCol: String, idCol: String,
-      queryVec: Array[Float]): Seq[Long] => Map[Long, Double] = {
-    val pin = vecPin(corpus, embCol, idCol)
-    ids => ids.iterator.flatMap(id =>
-      pin.get(id).map(e => id -> pinnedDot(e, queryVec))).toMap
-  }
-
-  /** The greedy beam walk: H hops over `adj` from `entryIds`, keeping the
-    * global best B visited. Each hop fetches the frontier's adjacency
-    * rows by a pushed `node_id IN` filter (the merge's grouping key, so
-    * Catalyst pushes it below the latest-wins aggregate into both base
-    * and delta scans) — driver state stays (B + E + H·B·2M) entries.
-    */
-  /** ONE walk core serving both consumers: the greedy beam walk
-    * (H hops over `adj` from `entryIds`, global best B kept; each hop's
-    * frontier adjacency fetched by a pushed `node_id IN` filter — the
-    * merge's grouping key, so Catalyst pushes it below the latest-wins
-    * aggregate) AND its per-hop trace — (cumulative candidates scored,
-    * current top-snapshotK visited) after every hop. Serving and the
-    * tuning curve derive from THIS one loop, so the measured hop curve
-    * always describes the walk that is actually served (two drifting
-    * copies was the hazard). An exhausted frontier stops expansion but
-    * keeps recording carry-forward snapshots so the curve has a row per
-    * hop. Driver state stays (B + E + H·B·2M) entries.
-    */
-  private def beamWalkCore(adj: DataFrame,
-      scoreOf: Seq[Long] => Map[Long, Double], entryIds: Seq[Long],
-      beam: Int, hops: Int,
-      snapshotK: Int): (Map[Long, Double], Seq[(Int, Long, Seq[Long])]) = {
-    var visited = scoreOf(entryIds)
-    var scored = visited.size.toLong
-    var expanded = Set.empty[Long]
-    val trace = Seq.newBuilder[(Int, Long, Seq[Long])]
-    var hop = 1
-    var exhausted = false
-    while (hop <= hops) {
-      if (!exhausted) {
-        // frontier: the beam-best visited nodes not yet expanded
-        val frontier = visited.toSeq
-          .sortBy { case (id, s) => (-s, id) }.take(beam)
-          .map(_._1).filterNot(expanded.contains)
-        if (frontier.isEmpty) exhausted = true
-        else {
-          // dedupe driver-side: a .distinct() here costs a shuffle stage
-          // per hop for ≤ B·2M rows — collect the explode narrow instead
-          val nbrs = adj.filter(col("node_id").isin(frontier: _*))
-            .select(explode(col("neighbors")).as("id"))
-            .collect().map(_.getLong(0)).distinct // ≤ B·2M rows per hop
-            .filterNot(visited.contains)
-          visited ++= scoreOf(nbrs.toIndexedSeq)
-          scored += nbrs.length
-          expanded ++= frontier
-        }
-      }
-      if (snapshotK > 0)
-        trace += ((hop, scored, visited.toSeq
-          .sortBy { case (id, s) => (-s, id) }.take(snapshotK).map(_._1)))
-      hop += 1
-    }
-    (visited, trace.result())
-  }
-
-  private def beamWalk(adj: DataFrame, scoreOf: Seq[Long] => Map[Long, Double],
-      entryIds: Seq[Long], beam: Int, hops: Int): Map[Long, Double] =
-    beamWalkCore(adj, scoreOf, entryIds, beam, hops, snapshotK = 0)._1
-
-  /** One TRACED walk: the serving walk's own loop with a snapshot after
-    * every hop — a recall-vs-hops tuning curve costs ONE walk per sample
-    * query instead of one walk per (query, hops) setting (hop h's state
-    * is a prefix of hop h+1's by construction, which also makes the
-    * curve monotone). Returns (hop, scored_so_far, top-k ids) for
-    * hop = 1..maxHops.
-    */
-  def nswSearchTrace(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, queryVec: Array[Float], k: Int,
-      beam: Int = 32, maxHops: Int = 4,
-      entries: Int = 16): Seq[(Int, Long, Seq[Long])] = withWalkConfs(spark) { spark =>
-    val scoreOf = scorer(corpus, embCol, idCol, queryVec)
-    val adj = readNswAdjacency(spark, path)
-    withPinned(Seq(adj)) {
-      beamWalkCore(adj, scoreOf, entryPoints(spark, adj, entries),
-        beam, maxHops, snapshotK = k)._2
-    }
-  }
-
-  /** Emission: drop tombstoned ids (legal waypoints, never results),
-    * apply the optional metadata predicate the same way (the hnswlib
-    * filtered-search semantics: the walk routes through every node, only
-    * emission is filtered — post-filtering a top-k would lose results,
-    * and pruning the WALK by the predicate could strand regions), and
-    * return the k best surviving visited as (idCol, score) rows. The
-    * predicate probe is one pushed `id IN` lookup bounded by the visited
-    * set, like the tombstone probe.
-    */
-  private def emitTopK(spark: SparkSession, path: String,
-      visited: Map[Long, Double], idCol: String, k: Int,
-      allowed: Option[DataFrame] = None,
-      exclude: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val visitedIds = visited.keys.toSeq
-    // conf-keyed forget exclusion joins the caller's serve-tail set —
-    // emission-side like every exclude, so the walk itself is untouched
-    val excl = exclude ++ graft.ops.Forget.defaultExcludeIds(spark)
-    val dead: Set[Long] =
-      if (visitedIds.isEmpty) Set.empty
-      else readNswTombstones(spark, path)
-        .filter(col("node_id").isin(visitedIds: _*))
-        .collect().map(_.getLong(0)).toSet
-    val pass: Long => Boolean = allowed match {
-      case None => _ => true
-      case Some(a) =>
-        if (visitedIds.isEmpty) _ => false
-        else {
-          val ok = a.filter(col(idCol).isin(visitedIds: _*))
-            .select(col(idCol)).collect().map(_.getLong(0)).toSet
-          ok.contains _
-        }
-    }
-    visited.toSeq.filter { case (id, _) =>
-        !dead.contains(id) && !excl.contains(id) && pass(id) }
-      .sortBy { case (id, s) => (-s, id) }.take(k)
-      .map { case (id, s) =>
-        (id, BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }
-      .toDF(idCol, "score")
-      // k driver-local rows: a single-partition narrow sort gives the
-      // same global order as orderBy without its range-sampling job
-      .coalesce(1).sortWithinPartitions(col("score").desc, col(idCol).asc)
-  }
-
-  /** Pin the merged adjacency for the duration of a walk — the hnswlib
-    * serving model (the graph lives resident) applied to the MOR view:
-    * without this, EVERY hop re-runs the base∪delta latest-wins aggregate
-    * just to fetch a frontier's rows. One merge pass per walk, then hops
-    * are in-memory filters; at 100 TB the pinned view is the serving
-    * tier's standing state (re-pinned per delta version), and the
-    * unpinned cold path stays correct, just slower.
-    */
-  private def withPinned[A](adjs: Seq[DataFrame])(f: => A): A = {
-    adjs.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try f finally adjs.foreach(_.unpersist(false))
-  }
-
-  /** Serving confs for the walk's micro-queries: every hop's frame is
-    * provably bounded (frontier ≤ B rows, neighbors ≤ B·2M) — AQE's
-    * per-stage re-planning spawns extra jobs that cost more than they
-    * could ever save on such rows, and a 32-partition shuffle schedules
-    * 32 near-empty tasks for a few hundred entries. Measured on the hnsw
-    * driver row: ~1 s of pure scheduling overhead.
-    *
-    * The confs live on a DEDICATED walk session (spark.newSession: same
-    * SparkContext, isolated SQL confs), created once per context with
-    * AQE off and 8 shuffle partitions, and handed to the body — which
-    * shadows `spark` with it, so every graph-side frame it builds runs
-    * under walk confs. The previous set/restore on the SHARED session
-    * leaked walk confs to any concurrent non-walk query and needed a
-    * JVM-wide lock that serialized walks against folds; a cloned session
-    * mutates nothing, so the lock is gone and a long fold no longer
-    * blocks serving walks. Caller-built frames (corpus point lookups,
-    * tombstone probes) keep their own session — they are narrow pushed
-    * scans with no exchange, where neither conf matters.
-    * Build/append jobs keep the session confs (their shuffles can be
-    * corpus-born, where AQE earns its jobs).
-    *
-    * CONF-INHERITANCE CUTOFF: the walk session is created ONCE per
-    * SparkContext via `spark.newSession()`, which snapshots only
-    * context-level and default confs — runtime SQL confs set on the
-    * caller's session AFTER the first walk never reach walk-side
-    * execution. Deliberate for the two confs pinned here, but a future
-    * session-level conf (an ANSI toggle, a codegen flag) must arrive
-    * context-wide (spark-defaults / -D system property) to influence
-    * walks — or this cache must become a per-caller cloneSession. Walks
-    * also compose caller-session frames (corpus, tombstones) into
-    * walk-session plans; those stay exchange-free pushed scans, where no
-    * session conf changes the result.
-    */
-  @volatile private var walkSessionRef: SparkSession = _
-
-  private def withWalkConfs[A](spark: SparkSession)(f: SparkSession => A): A = {
-    val cur = walkSessionRef
-    val ws =
-      if (cur != null && (cur.sparkContext eq spark.sparkContext)) cur
-      else synchronized {
-        val again = walkSessionRef
-        if (again != null && (again.sparkContext eq spark.sparkContext)) again
-        else {
-          val s = spark.newSession()
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          walkSessionRef = s
-          s
-        }
-      }
-    f(ws)
-  }
-
-  /** Beam search over the persisted graph: H hops, global beam B.
-    * `corpus` supplies (idCol, embCol) for scoring — at scale the same
-    * table the graph indexes, fetched by pushed id IN point lookups.
-    * Returns (idCol, score) rows for the k best visited, exact-scored.
-    */
-  def nswSearch(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, queryVec: Array[Float], k: Int,
-      beam: Int = 32, hops: Int = 4, entries: Int = 16,
-      allowed: Option[DataFrame] = None,
-      asOfSeq: Long = Long.MaxValue,
-      exclude: Set[Long] = Set.empty): DataFrame =
-    withWalkConfs(spark) { spark =>
-      val scoreOf = scorer(corpus, embCol, idCol, queryVec)
-      val adj = readNswAdjacencyAsOf(spark, path, asOfSeq)
-      withPinned(Seq(adj)) {
-        val visited =
-          beamWalk(adj, scoreOf, entryPoints(spark, adj, entries), beam, hops)
-        emitTopK(spark, path, visited, idCol, k, allowed, exclude)
-      }
-    }
-
   // ---------------------------------------------------------------------
   // HNSW: a coarse layer ladder above NSW layer 0 (Malkov & Yashunin
   // 2016). Upper layers hold geometrically thinner node subsets with
   // their own small NSW adjacency; a query greedily descends the ladder
   // (log-hops to the right region) and hands the layer-0 beam entry
-  // points already NEAR the answer — cutting the H·B·2M point lookups
-  // a cold flat walk spends crossing the graph.
+  // points already NEAR the answer — cutting the hops a flat walk
+  // spends crossing the graph.
   // ---------------------------------------------------------------------
 
   /** Deterministic HNSW level membership: node id belongs to every layer
@@ -1032,212 +754,80 @@ object GraphAnn {
     }
   }
 
-  /** BATCH graph retrieval: answer ALL queries with shared per-hop jobs —
-    * the lshBatchTopK economics brought to the walk family. Each query
-    * keeps its own driver-side beam state (B + E + H·B·2M entries, the
-    * usual serving bound), but every hop issues ONE adjacency fetch for
-    * the UNION of all frontiers and ONE embedding fetch for the union of
-    * all new candidates, so the per-hop job cost is amortized across the
-    * batch instead of multiplying by it (2 jobs/hop total vs 2·|q|).
-    * Scoring runs driver-side over the fetched (id, vector) rows — the
-    * fetch is bounded by |q|·B·2M rows of embCol width, the same order
-    * as the states themselves. Emission matches nswSearch per query
-    * (tombstones filtered, k best, 6-dp rounding, score-desc/id-asc).
-    */
-  /** Shared embedding state for a batch walk, served from the corpus pin
-    * (see vecPin above): vectors are resident per corpus version and
-    * reused across queries AND across ladder rungs (embeddings are
-    * layer-independent) — the per-hop union fetch job the cold path paid
-    * is gone; `fetch` survives as a no-op seam so the walk loop's shape
-    * (fetch-then-score per hop) reads unchanged.
-    */
-  private final class BatchScorer(corpus: DataFrame, embCol: String,
-      idCol: String) {
-    private val pin = vecPin(corpus, embCol, idCol)
-    def fetch(ids: Seq[Long]): Unit = ()
-    def cosine(id: Long, q: Array[Float]): Option[Double] =
-      pin.get(id).map(pinnedDot(_, q))
-  }
+  // ---- the resident pin -------------------------------------------------
+  // Every walk (flat, ladder, traced, driver-side or served) reads ONE
+  // pinned view per index version: the hnswlib serving model, where the
+  // graph and its vectors live resident, opened once per session like the
+  // reference's Chroma handle (query_rag_database.py:138-149) and reused
+  // across the session's repeated top-k queries.
 
-  /** The shared-job batch walk over ONE (caller-pinned) adjacency: every
-    * hop issues one adjacency fetch for the UNION of all frontiers and
-    * one embedding fetch for the union of all new candidates — 2 jobs
-    * per hop total instead of 2·|q| — while each query keeps its own
-    * isolated beam state (B + E + H·B·2M entries).
+  /** One pinned index version:
+    *  - per ladder rung (0 is the base layer, ℓ the `_l<ℓ>` rung) the
+    *    merged latest-wins adjacency, asOfSeq-pinned, and its node ids in
+    *    entry order (xxhash64 asc, id asc: a fixed, query-independent
+    *    sample — the fixed entry of HNSW generalized — of which a walk
+    *    takes a prefix);
+    *  - the corpus vectors and their length. Rows with a null embedding
+    *    are skipped, so they score nothing, like ids absent from the
+    *    corpus;
+    *  - the tombstone set (current, whatever the asOfSeq).
     */
-  private def batchBeamWalk(adj: DataFrame,
-      queries: Seq[(Long, Array[Float])], seedsOf: Long => Seq[Long],
-      scorer: BatchScorer, beam: Int,
-      hops: Int): Map[Long, Map[Long, Double]] = {
-    scorer.fetch(queries.flatMap { case (qid, _) => seedsOf(qid) }.distinct)
-    val visited = scala.collection.mutable.Map(queries.map { case (qid, qv) =>
-      qid -> scala.collection.mutable.Map(seedsOf(qid).distinct.flatMap(id =>
-        scorer.cosine(id, qv).map(id -> _)): _*)
-    }: _*)
-    val expanded = scala.collection.mutable.Map(
-      queries.map { case (qid, _) => qid -> Set.empty[Long] }: _*)
-    var hop = 0
-    while (hop < hops) {
-      // per-query frontier, driver-side; ONE union fetch below
-      val frontiers = queries.map { case (qid, _) =>
-        qid -> visited(qid).toSeq
-          .sortBy { case (id, s) => (-s, id) }.take(beam)
-          .map(_._1).filterNot(expanded(qid).contains)
-      }.toMap
-      val frontierUnion = frontiers.values.flatten.toSeq.distinct
-      if (frontierUnion.isEmpty) hop = hops
-      else {
-        val nbrsOf: Map[Long, Seq[Long]] =
-          adj.filter(col("node_id").isin(frontierUnion: _*))
-            .select(col("node_id"), col("neighbors")).collect()
-            .map(r => r.getLong(0) -> r.getSeq[Long](1).toIndexedSeq).toMap
-        scorer.fetch(nbrsOf.values.flatten.toSeq.distinct)
-        queries.foreach { case (qid, qv) =>
-          val vq = visited(qid)
-          frontiers(qid).foreach { f =>
-            nbrsOf.getOrElse(f, Nil).foreach { nb =>
-              if (!vq.contains(nb))
-                scorer.cosine(nb, qv).foreach(vq(nb) = _)
-            }
-          }
-          expanded(qid) ++= frontiers(qid)
-        }
-        hop += 1
-      }
+  private[graft] final case class View(
+      adj: IndexedSeq[Map[Long, Array[Long]]],
+      order: IndexedSeq[Array[Long]],
+      vec: Map[Long, Array[Float]],
+      dim: Int,
+      dead: Set[Long])
+
+  /** A cached view and the stamp it was built against. Served batches
+    * ship the view to their tasks as one broadcast, made on the first
+    * served batch per SparkContext, so driver-side walks never pay it. */
+  private final class Pin(val stamp: String, val view: View) {
+    private var bc: Broadcast[View] = _
+    private var bcCtx: SparkContext = _
+    def broadcast(sc: SparkContext): Broadcast[View] = synchronized {
+      if (bcCtx ne sc) { bc = sc.broadcast(view); bcCtx = sc }
+      bc
     }
-    visited.map { case (q, m) => q -> m.toMap }.toMap
-  }
-
-  /** Per-query emission for a batch walk: tombstones filtered, k best,
-    * 6-dp rounding, (qid, id) ordering — nswSearch's contract rowized.
-    */
-  private def emitBatchTopK(spark: SparkSession, path: String,
-      queries: Seq[(Long, Array[Float])],
-      visited: Map[Long, Map[Long, Double]], idCol: String,
-      k: Int, exclude: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val visitedAll = visited.values.flatMap(_.keys).toSeq.distinct
-    // conf-keyed forget exclusion joins the caller's set (see emitTopK)
-    val excl = exclude ++ graft.ops.Forget.defaultExcludeIds(spark)
-    val dead: Set[Long] =
-      if (visitedAll.isEmpty) Set.empty
-      else readNswTombstones(spark, path)
-        .filter(col("node_id").isin(visitedAll: _*))
-        .collect().map(_.getLong(0)).toSet
-    queries.flatMap { case (qid, _) =>
-      visited(qid).toSeq.filterNot { case (id, _) =>
-          dead.contains(id) || excl.contains(id) }
-        .sortBy { case (id, s) => (-s, id) }.take(k)
-        .map { case (id, s) => (qid, id,
-          BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
-    }.toDF("qid", idCol, "score")
-      // |q|·k driver-local rows: single-partition narrow sort, no
-      // range-sampling job (same global order as orderBy)
-      .coalesce(1).sortWithinPartitions(col("qid"), col(idCol))
-  }
-
-  def nswBatchSearch(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
-      k: Int, beam: Int = 32, hops: Int = 4,
-      entries: Int = 16,
-      exclude: Set[Long] = Set.empty): DataFrame = withWalkConfs(spark) { spark =>
-    val adj = readNswAdjacency(spark, path)
-    withPinned(Seq(adj)) {
-      val scorer = new BatchScorer(corpus, embCol, idCol)
-      val entryIds = entryPoints(spark, adj, entries)
-      val visited = batchBeamWalk(adj, queries, _ => entryIds, scorer, beam, hops)
-      emitBatchTopK(spark, path, queries, visited, idCol, k, exclude)
+    /** unpersist(false) drops executor copies only: an in-flight job
+      * re-fetches from the driver, so late readers stay correct. A dead
+      * context's blocks died with it. */
+    def release(): Unit = synchronized {
+      if (bc != null && !bcCtx.isStopped) bc.unpersist(false)
     }
   }
 
-  /** The in-memory beam walk over a RESIDENT view — beamWalkCore's exact
-    * loop (same frontier selection, same dedup, same left-to-right
-    * double dot, same (-score, id) ordering) with Map lookups replacing
-    * the per-hop Spark jobs. Shared by every task of a served batch.
-    */
-  private def residentWalk(adj: scala.collection.Map[Long, Array[Long]],
-      vec: scala.collection.Map[Long, Array[Float]], qv: Array[Float],
-      entryIds: Seq[Long], beam: Int, hops: Int): Map[Long, Double] = {
-    def score(id: Long): Option[Double] = vec.get(id).map { e =>
-      var s = 0.0; var i = 0
-      val n = math.min(e.length, qv.length)
-      while (i < n) { s += e(i).toDouble * qv(i).toDouble; i += 1 }
-      s
-    }
-    var visited: Map[Long, Double] =
-      entryIds.distinct.flatMap(id => score(id).map(id -> _)).toMap
-    var expanded = Set.empty[Long]
-    var hop = 1
-    var exhausted = false
-    while (hop <= hops && !exhausted) {
-      val frontier = visited.toSeq
-        .sortBy { case (id, s) => (-s, id) }.take(beam)
-        .map(_._1).filterNot(expanded.contains)
-      if (frontier.isEmpty) exhausted = true
-      else {
-        val nbrs = frontier.iterator
-          .flatMap(f => adj.getOrElse(f, Array.empty[Long]).iterator)
-          .toSeq.distinct.filterNot(visited.contains)
-        visited ++= nbrs.flatMap(id => score(id).map(id -> _))
-        expanded ++= frontier
-      }
-      hop += 1
-    }
-    visited
+  // Keyed by (index path, asOfSeq); validated by a STAMP that folds the
+  // FS listing of the index dir and every sidecar (_delta, _tombstones,
+  // each ladder rung and its _delta) AND the corpus' plan+input signature
+  // (ResultCache.cacheKey, which digests LocalRelations, so planted-copy
+  // corpora invalidate too). Any append/fold/compact/delete moves the
+  // stamp and the next walk re-pins in place; a same-version walk reuses
+  // the view with zero pin jobs. LRU-bounded at PinMax versions.
+  private val PinMax = 16
+  private val pins = new java.util.LinkedHashMap[String, Pin](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Pin]): Boolean =
+      if (size > PinMax) { e.getValue.release(); true } else false
   }
-
-  /** One pinned resident view of a graph index version: the merged
-    * (latest-wins, optionally asOfSeq-pinned) adjacency per rung, the
-    * shard's vectors, the tombstone set, and the precomputed hash-min
-    * entry points — all broadcast once and reused across serve calls.
-    */
-  private[graft] final case class ResidentPin(
-    rungs: Seq[(org.apache.spark.broadcast.Broadcast[Map[Long, Array[Long]]], Seq[Long])],
-    adj0: org.apache.spark.broadcast.Broadcast[Map[Long, Array[Long]]],
-    entryIds: Seq[Long],
-    vec: org.apache.spark.broadcast.Broadcast[Map[Long, Array[Float]]],
-    dead: org.apache.spark.broadcast.Broadcast[Set[Long]])
-
-  // ---- resident-pin cache ---------------------------------------------
-  // The hnswlib model the served rows cite pins the view ONCE per index
-  // version, not per call (the reference's Chroma handle is opened once
-  // per session, query_rag_database.py:138-149). Keyed by (path, asOfSeq,
-  // entry/descent params); validated by a STAMP that folds the FS listing
-  // of the index dir + every sidecar (_delta, _tombstones, ladder rungs)
-  // AND the corpus' plan+input signature (ResultCache.cacheKey — the
-  // LocalRelation-digesting key, so planted-copy corpora invalidate too).
-  // Any append/fold/compact/delete changes a listing, the stamp moves,
-  // and the next serve rebuilds; a same-version serve reuses the
-  // broadcasts with ZERO pin jobs. Bounded: one live entry per key,
-  // replaced in place (the superseded pin's broadcasts are unpersisted).
-  private val pinCache = scala.collection.concurrent.TrieMap
-    .empty[String, (String, ResidentPin)]
-  // Striped build locks: two concurrent first serves of the same version
-  // must NOT both collect+broadcast (the loser's broadcasts would leak —
-  // it saw old=None and never unpersists). Builds serialize per key
-  // stripe; the winner's pin is re-read inside the lock, so the racer
-  // reuses it. A FIXED stripe array (not a per-key map) keeps the lock
-  // state bounded over a serving JVM's lifetime — per-key lock objects
-  // would accumulate one entry per (path, asOfSeq, params) forever. Two
-  // distinct keys sharing a stripe merely serialize their builds, which
-  // is harmless (builds are rare: once per index version).
+  // Striped build locks: two concurrent first walks of the same version
+  // must NOT both collect (and the loser's pin would never be released).
+  // Builds serialize per key stripe and re-read the cache inside the
+  // lock, so the racer reuses the winner's pin. A FIXED stripe array
+  // keeps the lock state bounded over a serving JVM's lifetime; two keys
+  // sharing a stripe merely serialize their (rare) builds.
   private val pinLocks = Array.fill(64)(new Object)
   private def pinLock(key: String): Object =
     pinLocks(math.floorMod(key.hashCode, pinLocks.length))
   private val pinBuildCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Number of resident-pin BUILDS since JVM start (cache misses) —
-    * AnnIndexSpec pins that two same-version serves build once. */
+  /** Number of resident-pin BUILDS since JVM start (cache misses). */
   private[graft] def pinBuilds: Int = pinBuildCounter.get
 
   /** Drop every cached pin (spec isolation only — serving never needs it:
-    * stale pins are invalidated by stamp, not by eviction). */
-  private[graft] def dropPins(): Unit = {
-    pinCache.values.foreach { case (_, p) =>
-      (p.rungs.map(_._1) ++ Seq(p.adj0, p.vec, p.dead))
-        .foreach(_.unpersist(false))
-    }
-    pinCache.clear()
+    * stale pins are invalidated by stamp, evicted by the LRU bound). */
+  private[graft] def dropPins(): Unit = pins.synchronized {
+    pins.values.forEach(_.release())
+    pins.clear()
   }
 
   /** Cheap FS stamp of one directory: file count, total bytes, max mtime
@@ -1256,92 +846,178 @@ object GraphAnn {
     s"$p#$n#$bytes#$maxM"
   }
 
-  /** The pin for (index version, corpus, params): cache hit when the
-    * stamp still matches, else build (bounded collects: one merge scan
-    * per rung, one corpus scan, one tombstone scan) and replace.
+  /** The pin of (index version, corpus): a cache hit when the stamp still
+    * matches, else one build — one merge collect per rung (the ladder's
+    * rungs `_l1, _l2, …` are every consecutive one on disk), one corpus
+    * collect, one tombstone collect — that replaces the entry in place.
     */
-  private def residentPin(spark: SparkSession, path: String,
-      corpus: DataFrame, embCol: String, idCol: String, entries: Int,
-      rungPaths: Seq[String], descentBeam: Int,
-      asOfSeq: Long): ResidentPin = {
-    val key = s"$path#asOf=$asOfSeq#e=$entries#db=$descentBeam" +
-      s"#rungs=${rungPaths.mkString(",")}"
-    def stampNow() = (Seq(path, path + "_delta", path + "_tombstones") ++
-        rungPaths.flatMap(p => Seq(p, p + "_delta")))
-      .map(dirStamp(spark, _)).mkString("|") + "\u0000" +
-      graft.ops.ResultCache.cacheKey(corpus.select(col(idCol), col(embCol)))
-    pinCache.get(key) match {
-      case Some((s, pin)) if s == stampNow() => pin
-      case _ => pinLock(key).synchronized {
-      // Re-read under the lock AND recompute the stamp under it: a
-      // mutation can land between the fast-path stamp and lock
-      // acquisition, and a racing thread may have built the NEWER pin —
-      // comparing that against the stale stamp would discard its build,
-      // mislabel our rebuild's current-disk contents with the old stamp,
-      // and churn every subsequent serve (each sees a stamp mismatch).
-      val stamp = stampNow()
-      pinCache.get(key) match {
-      case Some((s, pin)) if s == stamp => pin
-      case old =>
-        def adjOf(p: String): Map[Long, Array[Long]] =
-          withWalkConfs(spark) { s => readNswAdjacencyAsOf(s, p, asOfSeq).collect() }
-            .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
-        // entryPoints' contract on the resident keys: xxhash64 asc, id asc
-        def hashEntries(m: Map[Long, Array[Long]], e: Int): Seq[Long] =
-          m.keys.toSeq.sortBy(id => (org.apache.spark.sql.catalyst
-            .expressions.XXH64.hashLong(id, 42L), id)).take(e)
-        val rungs = rungPaths.filter(p => pathExists(spark, p)).map { p =>
-          val m = adjOf(p)
-          (spark.sparkContext.broadcast(m), hashEntries(m, descentBeam))
+  private def pinned(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, asOfSeq: Long): Pin = {
+    val key = s"$path#asOf=$asOfSeq"
+    val proj = corpus.select(col(idCol).cast("long"), col(embCol))
+    def rungPaths(): Seq[String] = path +: Iterator.from(1)
+      .map(path + "_l" + _).takeWhile(pathExists(spark, _)).toSeq
+    def stampOf(rungs: Seq[String]): String =
+      ((rungs.flatMap(p => Seq(p, p + "_delta")) :+ (path + "_tombstones"))
+        .map(dirStamp(spark, _)).mkString("|") + "\u0000" +
+        graft.ops.ResultCache.cacheKey(proj))
+    def cached(stamp: String): Option[Pin] =
+      pins.synchronized(Option(pins.get(key))).filter(_.stamp == stamp)
+    cached(stampOf(rungPaths())).getOrElse(pinLock(key).synchronized {
+      // re-read under the lock AND restamp under it: a mutation can land
+      // between the fast-path stamp and lock acquisition, and a racing
+      // thread may have built the NEWER pin already
+      val rungs = rungPaths()
+      val stamp = stampOf(rungs)
+      cached(stamp).getOrElse {
+        val adj = rungs.map(p => readNswAdjacencyAsOf(spark, p, asOfSeq)
+          .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
+          .toMap).toIndexedSeq
+        val order = adj.map(_.keys.toArray.sortBy(id => (org.apache.spark.sql
+          .catalyst.expressions.XXH64.hashLong(id, 42L), id)))
+        val vecs = proj.collect().collect {
+          case r if !r.isNullAt(1) => r.getLong(0) -> r.getSeq[Float](1).toArray
         }
-        val adj0 = adjOf(path)
-        val vecMap: Map[Long, Array[Float]] =
-          corpus.select(col(idCol).cast("long"), col(embCol)).collect()
-            .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-        val dead: Set[Long] = readNswTombstones(spark, path)
-          .collect().map(_.getLong(0)).toSet
-        val pin = ResidentPin(rungs,
-          spark.sparkContext.broadcast(adj0), hashEntries(adj0, entries),
-          spark.sparkContext.broadcast(vecMap),
-          spark.sparkContext.broadcast(dead))
+        val dead = readNswTombstones(spark, path).collect().map(_.getLong(0)).toSet
+        val pin = new Pin(stamp, View(adj, order, vecs.toMap,
+          vecs.headOption.fold(-1)(_._2.length), dead))
         pinBuildCounter.incrementAndGet()
-        pinCache.put(key, (stamp, pin))
-        // `old` was read under the lock, so this unpersists exactly the
-        // pin evicted from the map. unpersist(false) only drops executor
-        // copies — an in-flight job re-fetches from the driver, so late
-        // readers of the superseded pin stay correct.
-        old.foreach { case (_, p) =>
-          (p.rungs.map(_._1) ++ Seq(p.adj0, p.vec, p.dead))
-            .foreach(_.unpersist(false))
-        }
+        Option(pins.synchronized(pins.put(key, pin))).foreach(_.release())
         pin
       }
-      }
-    }
+    })
   }
 
-  /** RESIDENT-VIEW batch serving — the hnswlib serving model the walk
-    * code cites, made a first-class path: the merged (latest-wins)
-    * adjacency, the shard's vectors, and the tombstone set are pinned
-    * ONCE PER INDEX VERSION as broadcast state (the residentPin cache
-    * above — a second serve against an unchanged index reuses the pin
-    * with zero pin jobs), and the whole query batch runs as ONE Spark
-    * job — each task walks its queries entirely in memory (zero per-hop
-    * driver↔executor round-trips, zero per-hop plan construction, the
-    * multi-second scheduling constant the distributed walk pays per
-    * query). Results are exactly `nswSearch`'s per query: the resident
-    * walk replicates beamWalkCore's loop (AnnIndexSpec's "served walk
-    * parity" pins row-for-row equality against nswBatchSearch).
-    *
-    * 100 TB posture: the resident view is per-SHARD serving state — ids
-    * + M neighbor ids + the vector column, the same memory bound hnswlib
-    * itself requires of a serving node — pinned once per index version
-    * and reused across batches; any append/fold/compact moves the stamp
-    * and the next serve re-pins. Corpora past one node's view run the
-    * sharded scatter-gather rows' pattern (serve each shard's view,
-    * union, re-top-k), or fall back to the distributed walk, which
-    * bounds memory at (B + E + H·B·2M) ids.
+  // ---- the walk ---------------------------------------------------------
+
+  /** Left-to-right double accumulation over the shorter length: the loop
+    * of the native DotProduct expression
+    * (org.apache.spark.sql.graft.DotProduct.nullSafeEval), so walk scores
+    * match the scan families' bit for bit. Query length is checked
+    * against the pin before any walk (requireDim). */
+  private def dot(e: Array[Float], q: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    val n = math.min(e.length, q.length)
+    while (i < n) { s += e(i).toDouble * q(i).toDouble; i += 1 }
+    s
+  }
+
+  private def requireDim(v: View, qv: Array[Float]): Unit =
+    if (v.dim >= 0 && qv.length != v.dim) throw new IllegalArgumentException(
+      s"query vector has ${qv.length} dimensions but the pinned vectors have ${v.dim}")
+
+  /** The n best ids of a scored set, by (score desc, id asc). */
+  private def best(scores: Map[Long, Double], n: Int): Seq[Long] =
+    scores.toSeq.sortBy { case (id, s) => (-s, id) }.take(n).map(_._1)
+
+  /** THE walk loop, shared by every NSW/HNSW search: the greedy beam walk
+    * over one rung's resident adjacency — H hops from `entryIds`, each
+    * expanding the beam-best B visited nodes not yet expanded and scoring
+    * their unvisited neighbors; every visited score is kept. With
+    * `snapshotK > 0` it also records (hop, cumulative candidates scored,
+    * current top-snapshotK) after every hop: the hop-curve tuning trace,
+    * so the measured curve always describes the served walk. An exhausted
+    * frontier stops expansion but keeps recording carry-forward snapshots
+    * so the curve has a row per hop.
     */
+  private def walk(adj: Map[Long, Array[Long]], vec: Map[Long, Array[Float]],
+      qv: Array[Float], entryIds: Seq[Long], beam: Int, hops: Int,
+      snapshotK: Int = 0): (Map[Long, Double], Seq[(Int, Long, Seq[Long])]) = {
+    def score(ids: Seq[Long]): Seq[(Long, Double)] =
+      ids.flatMap(id => vec.get(id).map(e => id -> dot(e, qv)))
+    var visited = score(entryIds.distinct).toMap
+    var scored = visited.size.toLong
+    var expanded = Set.empty[Long]
+    val trace = Seq.newBuilder[(Int, Long, Seq[Long])]
+    var hop = 1
+    var exhausted = false
+    while (hop <= hops && !(exhausted && snapshotK == 0)) {
+      if (!exhausted) {
+        val frontier = best(visited, beam).filterNot(expanded.contains)
+        if (frontier.isEmpty) exhausted = true
+        else {
+          val nbrs = frontier.flatMap(adj.getOrElse(_, Array.empty[Long]))
+            .distinct.filterNot(visited.contains)
+          visited ++= score(nbrs)
+          scored += nbrs.size
+          expanded ++= frontier
+        }
+      }
+      if (snapshotK > 0) trace += ((hop, scored, best(visited, snapshotK)))
+      hop += 1
+    }
+    (visited, trace.result())
+  }
+
+  /** Layer-0 entry points for one query. `maxLevel = 0` is the flat walk:
+    * the first `entries` ids of the entry order. Otherwise greedy-descend
+    * the rungs top-down (the ef=1 descent of HNSW, widened a little for
+    * determinism-safe ties): each rung walks from the previous rung's best
+    * `descentBeam` ids, or from its own entry prefix at the top, and
+    * layer 0 starts from the descended ids UNIONED with the fixed entries
+    * — the descent buys fast convergence, the fixed entries keep the flat
+    * walk's recall floor whatever the descent returns.
+    */
+  private def seeds(v: View, qv: Array[Float], entries: Int, maxLevel: Int,
+      descentBeam: Int, descentHops: Int): Seq[Long] = {
+    var carried = Seq.empty[Long]
+    (math.min(maxLevel, v.adj.size - 1) to 1 by -1).foreach { l =>
+      val s = if (carried.nonEmpty) carried else v.order(l).take(descentBeam).toSeq
+      if (s.nonEmpty) carried =
+        best(walk(v.adj(l), v.vec, qv, s, descentBeam, descentHops)._1, descentBeam)
+    }
+    (carried ++ v.order(0).take(entries)).distinct
+  }
+
+  /** One query's search over a view: seeds, then the layer-0 walk. */
+  private def ladderWalk(entries: Int, maxLevel: Int, descentBeam: Int,
+      descentHops: Int, beam: Int,
+      hops: Int): (View, Array[Float]) => Map[Long, Double] = (v, qv) =>
+    walk(v.adj(0), v.vec, qv,
+      seeds(v, qv, entries, maxLevel, descentBeam, descentHops), beam, hops)._1
+
+  /** THE emission: drop tombstoned, excluded and filtered-out ids (legal
+    * waypoints, never results — the hnswlib filtered-search semantics:
+    * the walk routes through every node, only emission is filtered, since
+    * pruning the WALK could strand regions), keep the k best by (score
+    * desc, id asc) and round scores to 6 dp.
+    */
+  private def topK(visited: Map[Long, Double], drop: Long => Boolean,
+      k: Int): Seq[(Long, Double)] =
+    visited.toSeq.filterNot { case (id, _) => drop(id) }
+      .sortBy { case (id, s) => (-s, id) }.take(k)
+      .map { case (id, s) =>
+        id -> BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      }
+
+  /** A single query, walked on the DRIVER over the pinned maps — no Spark
+    * job, except the optional metadata predicate's probe: one pushed
+    * `id IN` lookup bounded by the visited set. `exclude` (e.g. the
+    * forget ledger's ids) joins the conf-keyed default root's ids at
+    * emission. Returns (idCol, score) rows, score desc / id asc.
+    */
+  private def searchOne(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, qv: Array[Float], k: Int, asOfSeq: Long,
+      allowed: Option[DataFrame], exclude: Set[Long])(
+      search: (View, Array[Float]) => Map[Long, Double]): DataFrame = {
+    import spark.implicits._
+    val v = pinned(spark, path, corpus, embCol, idCol, asOfSeq).view
+    requireDim(v, qv)
+    val visited = search(v, qv)
+    val excl = exclude ++ graft.ops.Forget.defaultExcludeIds(spark)
+    val pass: Long => Boolean = allowed match {
+      case None => _ => true
+      case Some(_) if visited.isEmpty => _ => false
+      case Some(a) => a.filter(col(idCol).isin(visited.keys.toSeq: _*))
+        .select(col(idCol)).collect().map(_.getLong(0)).toSet
+    }
+    topK(visited, id => v.dead(id) || excl(id) || !pass(id), k)
+      .toDF(idCol, "score")
+      // k driver-local rows: a single-partition narrow sort gives the
+      // same global order as orderBy without its range-sampling job
+      .coalesce(1).sortWithinPartitions(col("score").desc, col(idCol).asc)
+  }
+
   /** The served walks' exclusion predicate: the caller's serve-tail set
     * unioned with the conf-keyed default root's ids, BROADCAST when
     * non-empty (a large ledger ships once per serve, not per task
@@ -1356,7 +1032,7 @@ object GraphAnn {
     * the next serve keys a fresh broadcast — exclusion stays serve-tail
     * state, never cache state. Bounded LRU; evictees unpersist(false)
     * (an in-flight job re-fetches from the driver, so late readers of an
-    * evicted broadcast stay correct — the residentPin discipline). */
+    * evicted broadcast stay correct — the pin discipline). */
   private val ExcludeBcMax = 64
   // value carries the OWNING context: unpersist routes through the
   // ACTIVE SparkEnv and broadcast ids restart per context, so calling
@@ -1410,38 +1086,29 @@ object GraphAnn {
     }
   }
 
-  def nswServedSearch(spark: SparkSession, path: String, corpus: DataFrame,
+  /** A query BATCH as ONE Spark job over the pinned view: the view ships
+    * once as a broadcast and each task walks its queries entirely in
+    * memory. Query lengths are checked on the driver before the job.
+    * `exclude` rides the SERVE, never the pin, so a forget committed
+    * after the pin was built flips the very next serve with no re-pin.
+    * Returns (qid, idCol, score) rows ordered by (qid, idCol).
+    */
+  private def serve(spark: SparkSession, path: String, corpus: DataFrame,
       embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
-      k: Int, beam: Int = 32, hops: Int = 4,
-      entries: Int = 16, asOfSeq: Long = Long.MaxValue,
-      exclude: Set[Long] = Set.empty): DataFrame = {
+      k: Int, asOfSeq: Long, exclude: Set[Long])(
+      search: (View, Array[Float]) => Map[Long, Double]): DataFrame = {
     import spark.implicits._
-    val pin = residentPin(spark, path, corpus, embCol, idCol, entries,
-      Nil, 0, asOfSeq)
-    val bcAdj = pin.adj0
-    val bcVec = pin.vec
-    val bcDead = pin.dead
-    val entryIds = pin.entryIds
-    // `exclude` (e.g. the forget ledger's id set) rides the SERVE, never
-    // the pin: the pinned view stays pure index-version state, so a
-    // forget committed after the pin was built flips the very next serve
-    // — zero pin rebuild, no ledger state baked into cached broadcasts.
-    // Broadcast per serve (NOT folded into the pin stamp): a large
-    // ledger ships once per serve like the pinned state, not once per
-    // task closure. The conf-keyed default root's ids join here too.
-    // Empty set (the conf-unset standing state): no broadcast at all —
-    // registration + cleaner pressure per serve buys nothing there.
+    val pin = pinned(spark, path, corpus, embCol, idCol, asOfSeq)
+    queries.foreach { case (_, qv) => requireDim(pin.view, qv) }
+    val bc = pin.broadcast(spark.sparkContext)
     val excludedBy = excludeFn(spark, exclude)
     spark.sparkContext
       .parallelize(queries.map { case (q, v) => (q, v.toSeq) },
         math.max(1, math.min(queries.size, spark.sparkContext.defaultParallelism)))
       .flatMap { case (qid, qv) =>
-        residentWalk(bcAdj.value, bcVec.value, qv.toArray, entryIds, beam, hops)
-          .toSeq.filterNot { case (id, _) =>
-            bcDead.value.contains(id) || excludedBy(id) }
-          .sortBy { case (id, s) => (-s, id) }.take(k)
-          .map { case (id, s) => (qid, id,
-            BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
+        val v = bc.value
+        topK(search(v, qv.toArray), id => v.dead(id) || excludedBy(id), k)
+          .map { case (id, s) => (qid, id, s) }
       }
       .toDF("qid", idCol, "score")
       // repartition(1), NOT coalesce(1): coalesce folds the parent
@@ -1451,120 +1118,47 @@ object GraphAnn {
       .repartition(1).sortWithinPartitions(col("qid"), col(idCol))
   }
 
-  /** Resident-view serving through the HNSW LADDER — nswServedSearch's
-    * model extended to the hierarchy, which is exactly what hnswlib
-    * itself serves resident: every rung's (small) adjacency collects
-    * next to layer 0's, and each task descends its queries in memory
-    * (same greedy per-rung walk and carried-seed semantics as
-    * hnswSearch/hnswBatchSearch: descend with descentBeam/descentHops,
-    * layer 0 walks from carried ∪ fixed hash-min entries, preserving the
-    * flat recall floor). One Spark job for the whole batch; parity with
-    * the distributed ladder walk is pinned row-for-row by AnnIndexSpec's
-    * "hnsw served parity". Upper rungs are geometrically thinner
-    * (|V|/fanout^ℓ), so the ladder adds ~15% to the resident view's
-    * memory bound. The whole ladder view is pinned once per index
-    * version via the residentPin cache; `asOfSeq` pins a delta
-    * generation exactly as in `hnswSearch` (each rung's deltas filtered
-    * to `seq <= asOfSeq`, tombstones applied current — the same emission
-    * contract as the distributed versioned walk), so time-travel reads
-    * serve through a cached pin too, keyed per pinned version.
+  // ---- search entry points ----------------------------------------------
+
+  /** Beam search over the persisted graph: H hops, global beam B, from
+    * the first E entry ids. `corpus` supplies (idCol, embCol) for scoring
+    * (pinned once per corpus and index version). Returns (idCol, score)
+    * rows for the k best visited, exact-scored. Tombstoned ids are legal
+    * waypoints, never results; `allowed` filters emission the same way;
+    * `asOfSeq` walks the graph as of a delta generation.
     */
-  def hnswServedSearch(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
-      k: Int, beam: Int = 32, hops: Int = 4, entries: Int = 16,
-      maxLevel: Int = 2, descentBeam: Int = 4,
-      descentHops: Int = 2, asOfSeq: Long = Long.MaxValue,
-      exclude: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val pin = residentPin(spark, path, corpus, embCol, idCol, entries,
-      (maxLevel to 1 by -1).map(l => path + "_l" + l), descentBeam, asOfSeq)
-    val rungs = pin.rungs
-    val bcAdj0 = pin.adj0
-    val bcVec = pin.vec
-    val bcDead = pin.dead
-    val fixed = pin.entryIds
-    // serve-scoped exclude broadcast — see nswServedSearch
-    val excludedBy = excludeFn(spark, exclude)
-    spark.sparkContext
-      .parallelize(queries.map { case (q, v) => (q, v.toSeq) },
-        math.max(1, math.min(queries.size, spark.sparkContext.defaultParallelism)))
-      .flatMap { case (qid, qvs) =>
-        val qv = qvs.toArray
-        var carried = Seq.empty[Long]
-        rungs.foreach { case (bcAdjL, entriesL) =>
-          val seeds = if (carried.nonEmpty) carried else entriesL
-          if (seeds.nonEmpty) {
-            val walked = residentWalk(bcAdjL.value, bcVec.value, qv, seeds,
-              descentBeam, descentHops)
-            carried = walked.toSeq.sortBy { case (id, s) => (-s, id) }
-              .take(descentBeam).map(_._1)
-          }
-        }
-        residentWalk(bcAdj0.value, bcVec.value, qv,
-            (carried ++ fixed).distinct, beam, hops)
-          .toSeq.filterNot { case (id, _) =>
-            bcDead.value.contains(id) || excludedBy(id) }
-          .sortBy { case (id, s) => (-s, id) }.take(k)
-          .map { case (id, s) => (qid, id,
-            BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
-      }
-      .toDF("qid", idCol, "score")
-      // repartition(1), NOT coalesce(1): coalesce folds the parent
-      // partitions into one task, which would serialize the per-query
-      // walks — the shuffle barrier keeps walk tasks parallel and the
-      // single downstream task sorts the bounded |q|·k result
-      .repartition(1).sortWithinPartitions(col("qid"), col(idCol))
+  def nswSearch(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, queryVec: Array[Float], k: Int,
+      beam: Int = 32, hops: Int = 4, entries: Int = 16,
+      allowed: Option[DataFrame] = None,
+      asOfSeq: Long = Long.MaxValue,
+      exclude: Set[Long] = Set.empty): DataFrame =
+    searchOne(spark, path, corpus, embCol, idCol, queryVec, k, asOfSeq,
+      allowed, exclude)(ladderWalk(entries, 0, 0, 0, beam, hops))
+
+  /** One TRACED walk: the serving walk's own loop with a snapshot after
+    * every hop — a recall-vs-hops tuning curve costs ONE walk per sample
+    * query instead of one walk per (query, hops) setting (hop h's state
+    * is a prefix of hop h+1's by construction, which also makes the
+    * curve monotone). Returns (hop, scored_so_far, top-k ids) for
+    * hop = 1..maxHops.
+    */
+  def nswSearchTrace(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, queryVec: Array[Float], k: Int,
+      beam: Int = 32, maxHops: Int = 4,
+      entries: Int = 16): Seq[(Int, Long, Seq[Long])] = {
+    val v = pinned(spark, path, corpus, embCol, idCol, Long.MaxValue).view
+    requireDim(v, queryVec)
+    walk(v.adj(0), v.vec, queryVec, seeds(v, queryVec, entries, 0, 0, 0),
+      beam, maxHops, snapshotK = k)._2
   }
 
-  /** Batch retrieval through the HNSW ladder: the descent ALSO batches —
-    * each rung runs one shared-job batch walk seeding every query's next
-    * rung, and the fetched vectors are reused across rungs (embeddings
-    * are layer-independent). Layer 0 walks from each query's carried
-    * seeds unioned with the fixed hash-min entries, preserving the
-    * flat-batch recall floor per query.
-    */
-  def hnswBatchSearch(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
-      k: Int, beam: Int = 32, hops: Int = 4, entries: Int = 16,
-      maxLevel: Int = 2, descentBeam: Int = 4,
-      descentHops: Int = 2,
-      exclude: Set[Long] = Set.empty): DataFrame = withWalkConfs(spark) { spark =>
-    val scorer = new BatchScorer(corpus, embCol, idCol)
-    var carried = Map.empty[Long, Seq[Long]]
-    var l = maxLevel
-    while (l >= 1) {
-      val layerPath = path + "_l" + l
-      if (pathExists(spark, layerPath)) {
-        val adjL = readNswAdjacency(spark, layerPath)
-        withPinned(Seq(adjL)) {
-          val entriesL = entryPoints(spark, adjL, descentBeam)
-          val walked = batchBeamWalk(adjL, queries,
-            q => carried.getOrElse(q, entriesL), scorer,
-            descentBeam, descentHops)
-          carried = walked.map { case (q, vis) =>
-            q -> vis.toSeq.sortBy { case (id, s) => (-s, id) }
-              .take(descentBeam).map(_._1)
-          }
-        }
-      }
-      l -= 1
-    }
-    val adj0 = readNswAdjacency(spark, path)
-    withPinned(Seq(adj0)) {
-      val fixed = entryPoints(spark, adj0, entries)
-      val visited = batchBeamWalk(adj0, queries,
-        q => (carried.getOrElse(q, Nil) ++ fixed).distinct, scorer, beam, hops)
-      emitBatchTopK(spark, path, queries, visited, idCol, k, exclude)
-    }
-  }
-
-  /** Hierarchical search: greedy-descend the ladder top-down (small beam
-    * per upper layer — the ef=1 descent of HNSW, widened a little for
-    * determinism-safe ties), then run the layer-0 beam from the descended
-    * entries UNIONED with the fixed hash-min entries — the descent buys
-    * fast convergence, the fixed entries guarantee the flat-NSW recall
-    * floor. Tombstone semantics match nswSearch (waypoints allowed,
-    * emission filtered, one sidecar for the whole ladder).
+  /** Hierarchical search: greedy-descend the ladder top-down, then run
+    * the layer-0 beam from the descended entries unioned with the fixed
+    * ones (see `seeds`). `asOfSeq` pins every rung: an append stamps all
+    * affected rungs in the same generation, so one asOfSeq is a
+    * consistent ladder-wide snapshot. Tombstone, `allowed` and `exclude`
+    * semantics match nswSearch (one sidecar for the whole ladder).
     */
   def hnswSearch(spark: SparkSession, path: String, corpus: DataFrame,
       embCol: String, idCol: String, queryVec: Array[Float], k: Int,
@@ -1573,40 +1167,31 @@ object GraphAnn {
       descentHops: Int = 2,
       allowed: Option[DataFrame] = None,
       asOfSeq: Long = Long.MaxValue,
-      exclude: Set[Long] = Set.empty): DataFrame = withWalkConfs(spark) { spark =>
-    val scoreOf = scorer(corpus, embCol, idCol, queryVec)
-    var carried = Seq.empty[Long] // best nodes so far, passed down the ladder
-    var l = maxLevel
-    while (l >= 1) {
-      val layerPath = path + "_l" + l
-      if (pathExists(spark, layerPath)) {
-        // version pinning applies PER RUNG: every rung's deltas carry
-        // their own seq ladder, and an append stamps all affected rungs
-        // in the same generation — so one asOfSeq pins a consistent
-        // ladder-wide snapshot (the graph time-travel model over rungs)
-        val adjL = readNswAdjacencyAsOf(spark, layerPath, asOfSeq)
-        withPinned(Seq(adjL)) {
-          val seeds =
-            if (carried.nonEmpty) carried
-            else entryPoints(spark, adjL, descentBeam)
-          if (seeds.nonEmpty) {
-            // the descent's only job is seeding layer 0 NEAR the answer —
-            // the HNSW ef=1 descent spends ~2 greedy steps per rung, and
-            // the layer-0 walk's own fixed entries + full hop budget keep
-            // the flat-NSW recall floor whatever the descent returns
-            val walked = beamWalk(adjL, scoreOf, seeds, descentBeam, descentHops)
-            carried = walked.toSeq.sortBy { case (id, s) => (-s, id) }
-              .take(descentBeam).map(_._1)
-          }
-        }
-      }
-      l -= 1
-    }
-    val adj0 = readNswAdjacencyAsOf(spark, path, asOfSeq)
-    withPinned(Seq(adj0)) {
-      val seeds0 = (carried ++ entryPoints(spark, adj0, entries)).distinct
-      val visited = beamWalk(adj0, scoreOf, seeds0, beam, hops)
-      emitTopK(spark, path, visited, idCol, k, allowed, exclude)
-    }
-  }
+      exclude: Set[Long] = Set.empty): DataFrame =
+    searchOne(spark, path, corpus, embCol, idCol, queryVec, k, asOfSeq,
+      allowed, exclude)(
+      ladderWalk(entries, maxLevel, descentBeam, descentHops, beam, hops))
+
+  /** nswSearch for a query batch, as one Spark job (see `serve`): per
+    * query exactly nswSearch's rows, keyed by qid. */
+  def nswServedSearch(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
+      k: Int, beam: Int = 32, hops: Int = 4,
+      entries: Int = 16, asOfSeq: Long = Long.MaxValue,
+      exclude: Set[Long] = Set.empty): DataFrame =
+    serve(spark, path, corpus, embCol, idCol, queries, k, asOfSeq, exclude)(
+      ladderWalk(entries, 0, 0, 0, beam, hops))
+
+  /** hnswSearch for a query batch, as one Spark job (see `serve`): per
+    * query exactly hnswSearch's rows, keyed by qid. Upper rungs are
+    * geometrically thinner (|V|/fanout^ℓ), so the ladder adds ~15% to
+    * the pinned view's memory. */
+  def hnswServedSearch(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
+      k: Int, beam: Int = 32, hops: Int = 4, entries: Int = 16,
+      maxLevel: Int = 2, descentBeam: Int = 4,
+      descentHops: Int = 2, asOfSeq: Long = Long.MaxValue,
+      exclude: Set[Long] = Set.empty): DataFrame =
+    serve(spark, path, corpus, embCol, idCol, queries, k, asOfSeq, exclude)(
+      ladderWalk(entries, maxLevel, descentBeam, descentHops, beam, hops))
 }

@@ -844,27 +844,6 @@ class AnnIndexSpec extends SparkSpec {
     assert(!v1.exists(_ >= 100005L), "v1 leaked appended rows")
   }
 
-  test("batch walk parity: shared-job batch equals per-query walks on the raw corpus") {
-    import graft.vector.GraphAnn
-    val path = java.nio.file.Files
-      .createTempDirectory("nsw_batch_parity").toString + "/g"
-    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    GraphAnn.buildNswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
-    val queries = e.filter(col("vec_id") < 3L).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-    val batch = GraphAnn.nswBatchSearch(spark, path, e,
-        "embedding", "vec_id", queries, k = 10)
-      .collect().groupBy(_.getLong(0))
-      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    queries.foreach { case (qid, qv) =>
-      val single = GraphAnn.nswSearch(spark, path, e,
-          "embedding", "vec_id", qv, k = 10)
-        .collect().map(_.getLong(0)).toSet
-      assert(batch(qid) === single,
-        s"query $qid: batch ${batch(qid)} != single $single")
-    }
-  }
-
   test("ann_auto_route: scans win small corpora, graph wins at scale, route deterministic") {
     // small corpus: pruned scans undercut the walk's fixed per-job cost
     val (small, smallCosts) = AnnIndex.routeAnnFamily(60000L, 0.34, 0.25)
@@ -921,43 +900,56 @@ class AnnIndexSpec extends SparkSpec {
       jobCostRows = 50000L)._1 === "graph")
   }
 
-  test("served walk parity: resident-view serving equals the distributed batch walk row-for-row") {
+  private def walkQueries(e: org.apache.spark.sql.DataFrame): Seq[(Long, Array[Float])] =
+    e.filter(col("vec_id") < 3L).orderBy("vec_id").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
+
+  /** (qid, id, score) rows of a served batch, in its (qid, id) order. */
+  private def servedRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+
+  /** The same rows from one single-query search per query. */
+  private def singleRows(queries: Seq[(Long, Array[Float])])(
+      search: Array[Float] => org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    queries.flatMap { case (qid, qv) =>
+      search(qv).collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
+        .sortBy(_._2)
+    }
+
+  test("served nsw batch equals single-query nswSearch row for row") {
+    // the task runner (one Spark job over the broadcast pin) against the
+    // driver runner (the same loop over the driver's pinned maps)
     import graft.vector.GraphAnn
-    val path = java.nio.file.Files
-      .createTempDirectory("nsw_served_parity").toString + "/g"
+    val path = Files.createTempDirectory("nsw_served_single").toString + "/g"
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     GraphAnn.buildNswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
-    // a tombstone exercises served-side emission filtering too
+    // a tombstone exercises both emissions' filtering too
     GraphAnn.deleteFromNswGraph(spark, Seq(1L), path)
-    val queries = e.filter(col("vec_id") < 3L).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val served = rows(GraphAnn.nswServedSearch(spark, path, e,
+    val queries = walkQueries(e)
+    val served = servedRows(GraphAnn.nswServedSearch(spark, path, e,
       "embedding", "vec_id", queries, k = 10))
-    val walked = rows(GraphAnn.nswBatchSearch(spark, path, e,
-      "embedding", "vec_id", queries, k = 10))
-    assert(served === walked,
-      s"served/distributed divergence:\n$served\nvs\n$walked")
+    val single = singleRows(queries)(qv => GraphAnn.nswSearch(spark, path, e,
+      "embedding", "vec_id", qv, k = 10))
+    assert(served.size === 30)
+    assert(served === single, s"served/single divergence:\n$served\nvs\n$single")
     assert(!served.exists(_._2 == 1L), "served a tombstoned id")
   }
 
-  test("hnsw served parity: resident ladder serving equals the distributed batch descent") {
+  test("served hnsw batch equals single-query hnswSearch row for row") {
     import graft.vector.GraphAnn
-    val path = java.nio.file.Files
-      .createTempDirectory("hnsw_served_parity").toString + "/g"
+    val path = Files.createTempDirectory("hnsw_served_single").toString + "/g"
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     GraphAnn.buildHnswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
-    val queries = e.filter(col("vec_id") < 3L).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val served = rows(GraphAnn.hnswServedSearch(spark, path, e,
+    GraphAnn.deleteFromNswGraph(spark, Seq(1L), path)
+    val queries = walkQueries(e)
+    val served = servedRows(GraphAnn.hnswServedSearch(spark, path, e,
       "embedding", "vec_id", queries, k = 10))
-    val walked = rows(GraphAnn.hnswBatchSearch(spark, path, e,
-      "embedding", "vec_id", queries, k = 10))
-    assert(served === walked,
-      s"hnsw served/distributed divergence:\n$served\nvs\n$walked")
+    val single = singleRows(queries)(qv => GraphAnn.hnswSearch(spark, path, e,
+      "embedding", "vec_id", qv, k = 10))
+    assert(served.size === 30)
+    assert(served === single,
+      s"hnsw served/single divergence:\n$served\nvs\n$single")
+    assert(!served.exists(_._2 == 1L), "served a tombstoned id")
   }
 
   test("resident pin amortization: same-version serves build the pin once; a mutation re-pins") {
@@ -987,56 +979,170 @@ class AnnIndexSpec extends SparkSpec {
     assert(!third.exists(_._2 == first.head._2), "stale pin served a deleted id")
   }
 
-  test("hnsw served time travel parity: asOfSeq-pinned serve equals the distributed versioned walk") {
+  test("nsw asOfSeq 0 serve equals a fresh build of v1 alone") {
     import graft.vector.GraphAnn
-    val path = Files.createTempDirectory("hnsw_tt_served").toString + "/g"
+    val dir = Files.createTempDirectory("nsw_tt_served").toString
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     val v1 = e.filter(col("vec_id") < 200L)
-    GraphAnn.buildHnswGraph(v1, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
+    GraphAnn.buildNswGraph(v1, "embedding", "vec_id", AnnIndex.defaultLsh, 8, dir + "/g")
+    GraphAnn.appendToNswGraph(spark, e.filter(col("vec_id").between(200L, 249L)),
+      "embedding", "vec_id", AnnIndex.defaultLsh, 8, dir + "/g", v1)
+    GraphAnn.buildNswGraph(v1, "embedding", "vec_id", AnnIndex.defaultLsh, 8, dir + "/v1")
+    val queries = walkQueries(e)
+    val asOf0 = servedRows(GraphAnn.nswServedSearch(spark, dir + "/g", e,
+      "embedding", "vec_id", queries, k = 10, asOfSeq = 0L))
+    val fresh = servedRows(GraphAnn.nswServedSearch(spark, dir + "/v1", e,
+      "embedding", "vec_id", queries, k = 10))
+    assert(asOf0 === fresh, s"asOf=0 / v1-only divergence:\n$asOf0\nvs\n$fresh")
+    assert(!asOf0.exists(_._2 >= 200L), "as-of-0 serve leaked appended ids")
+    val single = singleRows(queries)(qv => GraphAnn.nswSearch(spark, dir + "/g", e,
+      "embedding", "vec_id", qv, k = 10, asOfSeq = 0L))
+    assert(single === fresh)
+  }
+
+  test("hnsw asOfSeq 0 serve equals a fresh build of v1 alone") {
+    import graft.vector.GraphAnn
+    val dir = Files.createTempDirectory("hnsw_tt_served").toString
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val v1 = e.filter(col("vec_id") < 200L)
+    GraphAnn.buildHnswGraph(v1, "embedding", "vec_id", AnnIndex.defaultLsh, 8, dir + "/g")
     GraphAnn.appendToHnswGraph(spark, e.filter(col("vec_id").between(200L, 249L)),
-      "embedding", "vec_id", AnnIndex.defaultLsh, 8, path, v1)
-    val qv = e.filter(col("vec_id") === 0L).collect()
-      .head.getSeq[Float](1).toArray
-    for (asOf <- Seq(0L, Long.MaxValue)) {
-      val served = GraphAnn.hnswServedSearch(spark, path, e,
-          "embedding", "vec_id", Seq(0L -> qv), k = 10, asOfSeq = asOf)
-        .collect().map(r => (r.getLong(1), r.getDouble(2)))
-        .sortBy { case (id, s) => (-s, id) }.toSeq
-      val walked = GraphAnn.hnswSearch(spark, path, e,
-          "embedding", "vec_id", qv, k = 10, asOfSeq = asOf)
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-        .sortBy { case (id, s) => (-s, id) }.toSeq
-      assert(served === walked,
-        s"asOf=$asOf served/distributed divergence:\n$served\nvs\n$walked")
-      if (asOf == 0L)
-        assert(!served.exists(_._1 >= 200L), "as-of-0 serve leaked appended ids")
+      "embedding", "vec_id", AnnIndex.defaultLsh, 8, dir + "/g", v1)
+    GraphAnn.buildHnswGraph(v1, "embedding", "vec_id", AnnIndex.defaultLsh, 8, dir + "/v1")
+    val queries = walkQueries(e)
+    val asOf0 = servedRows(GraphAnn.hnswServedSearch(spark, dir + "/g", e,
+      "embedding", "vec_id", queries, k = 10, asOfSeq = 0L))
+    val fresh = servedRows(GraphAnn.hnswServedSearch(spark, dir + "/v1", e,
+      "embedding", "vec_id", queries, k = 10))
+    assert(asOf0 === fresh, s"asOf=0 / v1-only divergence:\n$asOf0\nvs\n$fresh")
+    assert(!asOf0.exists(_._2 >= 200L), "as-of-0 serve leaked appended ids")
+    val single = singleRows(queries)(qv => GraphAnn.hnswSearch(spark, dir + "/g", e,
+      "embedding", "vec_id", qv, k = 10, asOfSeq = 0L))
+    assert(single === fresh)
+  }
+
+  test("null embeddings score nothing and never fail a walk") {
+    import graft.vector.GraphAnn
+    val path = Files.createTempDirectory("hnsw_null_emb").toString + "/g"
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    GraphAnn.buildHnswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
+    val qv = walkQueries(e).head._2 // id 0's own vector
+    val corpus = e.withColumn("embedding", when(col("vec_id") === 0L,
+      lit(null).cast("array<float>")).otherwise(col("embedding")))
+    val got = Map(
+      "nswSearch" -> GraphAnn.nswSearch(spark, path, corpus,
+        "embedding", "vec_id", qv, k = 10).collect().map(_.getLong(0)).toSeq,
+      "hnswSearch" -> GraphAnn.hnswSearch(spark, path, corpus,
+        "embedding", "vec_id", qv, k = 10).collect().map(_.getLong(0)).toSeq,
+      "nswServedSearch" -> GraphAnn.nswServedSearch(spark, path, corpus,
+        "embedding", "vec_id", Seq(0L -> qv), k = 10).collect().map(_.getLong(1)).toSeq)
+    got.foreach { case (fn, ids) =>
+      assert(ids.size === 10, s"$fn returned ${ids.size} rows")
+      assert(!ids.contains(0L), s"$fn emitted the null-embedding id")
     }
   }
 
-  test("nsw served time travel parity: asOfSeq-pinned serve equals the distributed versioned walk") {
+  test("dimension mismatch: walks reject a query of another length") {
     import graft.vector.GraphAnn
-    val path = Files.createTempDirectory("nsw_tt_served").toString + "/g"
+    val path = Files.createTempDirectory("hnsw_dim").toString + "/g"
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    val v1 = e.filter(col("vec_id") < 200L)
-    GraphAnn.buildNswGraph(v1, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
-    GraphAnn.appendToNswGraph(spark, e.filter(col("vec_id").between(200L, 249L)),
-      "embedding", "vec_id", AnnIndex.defaultLsh, 8, path, v1)
-    val qv = e.filter(col("vec_id") === 0L).collect()
-      .head.getSeq[Float](1).toArray
-    for (asOf <- Seq(0L, Long.MaxValue)) {
-      val served = GraphAnn.nswServedSearch(spark, path, e,
-          "embedding", "vec_id", Seq(0L -> qv), k = 10, asOfSeq = asOf)
-        .collect().map(r => (r.getLong(1), r.getDouble(2)))
-        .sortBy { case (id, s) => (-s, id) }.toSeq
-      val walked = GraphAnn.nswSearch(spark, path, e,
-          "embedding", "vec_id", qv, k = 10, asOfSeq = asOf)
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-        .sortBy { case (id, s) => (-s, id) }.toSeq
-      assert(served === walked,
-        s"asOf=$asOf served/distributed divergence:\n$served\nvs\n$walked")
-      if (asOf == 0L)
-        assert(!served.exists(_._1 >= 200L), "as-of-0 serve leaked appended ids")
+    GraphAnn.buildHnswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
+    val qv = walkQueries(e).head._2
+    assert(qv.length === 64)
+    val short = qv.take(63)
+    // batches fail on the driver, before the serving job: an error thrown
+    // inside a task would surface wrapped in a SparkException instead
+    Seq[() => Any](
+      () => GraphAnn.nswSearch(spark, path, e, "embedding", "vec_id", short, k = 5),
+      () => GraphAnn.hnswSearch(spark, path, e, "embedding", "vec_id", short, k = 5),
+      () => GraphAnn.nswServedSearch(spark, path, e, "embedding", "vec_id",
+        Seq(0L -> qv, 1L -> short), k = 5),
+      () => GraphAnn.hnswServedSearch(spark, path, e, "embedding", "vec_id",
+        Seq(0L -> short), k = 5)
+    ).foreach { call =>
+      val err = intercept[IllegalArgumentException](call())
+      assert(err.getMessage.contains("63") && err.getMessage.contains("64"),
+        err.getMessage)
     }
+  }
+
+  test("one pin: flat, ladder and served walks of a version build it once") {
+    import graft.vector.GraphAnn
+    val path = Files.createTempDirectory("hnsw_one_pin").toString + "/g"
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    GraphAnn.buildHnswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
+    val qv = walkQueries(e).head._2
+    val b0 = GraphAnn.pinBuilds
+    GraphAnn.nswSearch(spark, path, e, "embedding", "vec_id", qv, k = 10).collect()
+    GraphAnn.hnswSearch(spark, path, e, "embedding", "vec_id", qv, k = 10).collect()
+    GraphAnn.hnswServedSearch(spark, path, e, "embedding", "vec_id",
+      Seq(0L -> qv), k = 10).collect()
+    GraphAnn.nswServedSearch(spark, path, e, "embedding", "vec_id",
+      Seq(0L -> qv), k = 10).collect()
+    GraphAnn.nswSearchTrace(spark, path, e, "embedding", "vec_id", qv, k = 10)
+    assert(GraphAnn.pinBuilds - b0 === 1)
+  }
+
+  test("single-query walks run at most 2 Spark jobs once warm") {
+    import graft.vector.GraphAnn
+    val path = Files.createTempDirectory("hnsw_walk_jobs").toString + "/g"
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    GraphAnn.buildHnswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
+    val qv = walkQueries(e).head._2
+    GraphAnn.hnswSearch(spark, path, e, "embedding", "vec_id", qv, k = 10).collect()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // async listener bus: settle until stable
+    def settled(): Int = {
+      var prev = -1; var cur = jobs.get(); var waited = 0
+      while (cur != prev && waited < 100) {
+        Thread.sleep(100); waited += 1; prev = cur; cur = jobs.get()
+      }
+      cur
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try for (hops <- Seq(4, 8)) {
+      Map[String, () => Any](
+        "nswSearch" -> (() => GraphAnn.nswSearch(spark, path, e,
+          "embedding", "vec_id", qv, k = 10, hops = hops).collect()),
+        "hnswSearch" -> (() => GraphAnn.hnswSearch(spark, path, e,
+          "embedding", "vec_id", qv, k = 10, hops = hops).collect())
+      ).foreach { case (fn, call) =>
+        val j0 = settled()
+        call()
+        val n = settled() - j0
+        assert(n <= 2, s"$fn at hops=$hops ran $n jobs")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("resident pins are LRU-bounded at 16 index versions") {
+    import graft.vector.GraphAnn
+    val dir = Files.createTempDirectory("nsw_pin_lru").toString
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+      .filter(col("vec_id") < 40L)
+    GraphAnn.buildNswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, dir + "/g0")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (1 to 16).foreach { i =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(dir + "/g0"),
+        fs, new org.apache.hadoop.fs.Path(dir + s"/g$i"), false,
+        spark.sparkContext.hadoopConfiguration)
+    }
+    val queries = walkQueries(e)
+    def serve(i: Int) = GraphAnn.nswServedSearch(spark, dir + s"/g$i", e,
+      "embedding", "vec_id", queries, k = 5).collect()
+    val b0 = GraphAnn.pinBuilds
+    serve(0)
+    (1 to 16).foreach(serve)
+    assert(GraphAnn.pinBuilds - b0 === 17)
+    serve(16) // most recent: still pinned
+    assert(GraphAnn.pinBuilds - b0 === 17)
+    serve(0) // evicted by the 16 paths served after it
+    assert(GraphAnn.pinBuilds - b0 === 18)
   }
 
   test("ann_graph_time_travel_topk: seq-pinned walks isolate delta generations") {

@@ -302,7 +302,7 @@ class ForgetSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq
     assert(!flat.contains(900000L) && flat.contains(0L) && flat.size === 5,
       s"flat walk must exclude at the tail and still fill k: $flat")
-    val batch = GraphAnn.nswBatchSearch(spark, path, corpus,
+    val batch = GraphAnn.nswServedSearch(spark, path, corpus,
         "embedding", "vec_id", Seq((7L, qv)), k = 5, exclude = excl)
       .collect().map(_.getLong(1)).toSeq
     assert(!batch.contains(900000L) && batch.contains(0L) && batch.size === 5,
